@@ -166,16 +166,12 @@ def build_ivf_index(embeddings: DataFrame, centroids: list[list[float]],
     # persisted for the write's duration (r15, VERDICT r14 #3): the
     # range sampler is its own job, so the k-distance assignment ran
     # twice per build — see sources/tables.write_index_clustered
-    from pyspark import StorageLevel
+    from ..session import materialized
 
-    assigned = assign_centroids(base, centroids).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    try:
+    with materialized(assign_centroids(base, centroids)) as assigned:
         (assigned
          .repartitionByRange(n, "centroid_id", "vec_id")
          .write.mode("overwrite").partitionBy("centroid_id").parquet(path))
-    finally:
-        assigned.unpersist()
 
 
 def ivf_topk(embeddings: DataFrame, centroids: list[list[float]],

@@ -9,8 +9,10 @@ the S3A/Delta wiring, plus the scale-oriented defaults the reference lacks
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -47,11 +49,42 @@ def get_spark(app_name: str = "samdis-engine", shuffle_partitions: int | None = 
         b = b.master(f"local[{n}]").config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # Streaming checkpoints on the local filesystem: the default
+        # FileContext-based manager resolves links (getFileLinkStatus) on
+        # every rename, and without the native Hadoop library each of
+        # those forks a `readlink` process: ~50 forks per CDC micro-batch,
+        # which made the offset-WAL and commit-log writes ~4x slower. On
+        # a local filesystem both managers check that the target is
+        # absent and then File.renameTo, so the FileSystem-based one is
+        # no weaker here. Cluster sessions keep the default: HDFS's
+        # FileContext rename is the atomic one.
+        b = b.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def materialized(df: DataFrame,
+                 level: StorageLevel = StorageLevel.MEMORY_AND_DISK):
+    """Yield ``df`` persisted at ``level`` for the block, then release
+    only what this call cached. A frame whose plan is already cached
+    (by the caller, or an equal plan elsewhere) is yielded as is and
+    stays cached afterwards."""
+    lvl = df.storageLevel
+    if lvl.useMemory or lvl.useDisk:
+        yield df
+        return
+    df = df.persist(level)
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def cluster_conf(executors: int = 1000, cores_per_executor: int = 4,

@@ -231,6 +231,14 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
     Reference anchor: SaveDelta.scala:157-163 (checkpointed Delta append
     sink).
 
+    A plain micro-batch runs ONE Spark job, the parquet write; there is
+    no separate emptiness job. The written dir's row count comes from
+    its parquet footers, and an empty batch (e.g. only malformed or
+    tombstone frames) removes its dir and commits nothing. Targets with
+    generated/identity/partition config route through ``append()`` and
+    keep an ``isEmpty()`` job, since ``append()`` would commit an empty
+    version.
+
     ``export_delta=True`` (r14) re-exports the table's Delta-protocol
     ``_delta_log`` after every committed micro-batch — the INCREMENTAL
     export writes only the new commit's JSON (O(batch), the
@@ -242,8 +250,6 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
     from ..sources.txnlog import TxnConflictError, TxnTable
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         table = TxnTable(target)
         seen = table.max_stream_batch_id(app_id)
         if seen is not None and batch_id <= seen:
@@ -266,12 +272,21 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
             # streaming ingest into a date-partitioned table). The
             # shared helper absorbs same-batch replica races via the
             # in-commit ledger raise + a None-safe ledger re-check.
+            # append() would commit an empty version, so this path
+            # keeps its own emptiness job.
+            if batch_df.isEmpty():
+                return
             from .scd2 import _routed_append
 
             _routed_append(table, batch_df, batch_id, app_id, meta)
             _maybe_export(table)
             return
         rel = table._write_data(batch_df)  # noqa: SLF001 — package-internal
+        if table._dir_rows(rel) == 0:  # noqa: SLF001 — footers only
+            # empty batch: nothing to commit; a crash before this
+            # removal leaves an unreferenced dir for vacuum()
+            _shutil.rmtree(os.path.join(target, rel), ignore_errors=True)
+            return
         for _ in range(5):  # blind append: commit races are retryable
             try:
                 table.commit([rel], [], meta)

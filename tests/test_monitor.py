@@ -47,3 +47,39 @@ def test_progress_monitor_accounts_all_rows(spark, sf_dir, tmp_path):
                              filtered_rows=filtered)["drift"] == 1
     finally:
         spark.streams.removeListener(mon)
+
+
+def test_progress_monitor_keeps_phase_timings_and_state(spark, sf_dir,
+                                                        tmp_path):
+    """Every micro-batch's durationMs phases and its state operators'
+    sizes are kept, so a stream's fixed per-batch cost is measured."""
+    import time
+
+    src = str(tmp_path / "src")
+    D.cdc_events(spark, sf_dir).repartition(3).write.parquet(src)
+    mon = ProgressMonitor()
+    spark.streams.addListener(mon)
+    try:
+        parsed = P.stream_cdc_from_files(spark, src, max_files_per_trigger=1)
+        q = P.write_stream_memory(parsed.dropDuplicates(["id"]), "mon_phases")
+        q.awaitTermination(120)
+        qid, n = str(q.id), len(q.recentProgress)
+        for _ in range(20):  # listener events are async
+            if qid in mon.stats and mon.stats[qid].batches >= n:
+                break
+            time.sleep(0.5)
+        s = mon.stats[qid]
+        assert n >= 3 and s.batches == n
+        assert len(s.duration_ms) == len(s.state_operators) == n
+        for d in s.duration_ms:
+            for phase in ("triggerExecution", "addBatch", "latestOffset",
+                          "walCommit", "commitOffsets"):
+                assert phase in d and d[phase] >= 0
+        assert all(len(ops) == 1 for ops in s.state_operators)
+        distinct = spark.table("mon_phases").count()
+        assert s.state_operators[-1][0]["numRowsTotal"] == distinct
+        assert s.state_operators[-1][0]["memoryUsedBytes"] > 0
+        p50 = mon.summary()[qid]["phase_ms_p50"]
+        assert p50["triggerExecution"] >= p50["addBatch"]
+    finally:
+        spark.streams.removeListener(mon)

@@ -312,6 +312,77 @@ def test_txn_append_sink_replay_guard(spark, cdc_dir, tmp_path):
     assert t.latest_version() == v1  # no empty/duplicate commits
 
 
+def _write_frames(path: str, values: list) -> None:
+    """One parquet file of Kafka-shaped CDC records with these values."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(values)
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    pq.write_table(pa.table({
+        "key": pa.array([None] * n, pa.string()),
+        "value": pa.array(values, pa.string()),
+        "topic": pa.array(["activities"] * n),
+        "partition": pa.array([0] * n, pa.int32()),
+        "offset": pa.array(range(n), pa.int64()),
+        "timestamp": pa.array([ts] * n, pa.timestamp("us", tz="UTC")),
+    }), path)
+
+
+def test_txn_append_sink_empty_batch_commits_nothing(spark, tmp_path):
+    """A micro-batch holding only malformed and tombstone frames parses
+    to zero rows: the sink commits no version and leaves no dir under
+    data/ (the written-then-empty dir is removed). The next non-empty
+    batch commits under its own stream_batch_id."""
+    import os
+
+    from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+        TxnTable,
+    )
+
+    after = ('{"id":%d,"id_employee":7,"first_name":"A","last_name":"B",'
+             '"start_datetime":1700000000000000,"sport_type":"run",'
+             '"distance":5,"activity_duration":30,"comment":null}')
+    src, table, ckpt = (str(tmp_path / d) for d in ("src", "t", "ckpt"))
+    os.makedirs(src)
+    _write_frames(os.path.join(src, "a.parquet"), [
+        "{not json",                                   # malformed
+        None,                                          # Kafka tombstone
+        '{"schema":{"type":"struct"}}',                # schema-only frame
+        '{"payload":{"before":%s,"after":null,"op":"d"}}' % (after % 1),
+    ])
+
+    def run():
+        P.write_stream_txn_append(
+            P.stream_cdc_from_files(spark, src, max_files_per_trigger=1),
+            table, ckpt).awaitTermination(120)
+
+    run()
+    t = TxnTable(table)
+    assert t.latest_version() is None
+    data = os.path.join(table, "data")
+    assert not os.path.isdir(data) or os.listdir(data) == []
+
+    _write_frames(os.path.join(src, "b.parquet"), [
+        '{"payload":{"before":null,"after":%s,"op":"c"}}' % (after % i)
+        for i in (2, 3)])
+    run()
+    docs = t.history()
+    assert [d["meta"]["stream_batch_id"] for d in docs] == [1]
+    assert t.read(spark).count() == 2
+    assert len(os.listdir(data)) == 1
+
+
+def test_local_session_uses_filesystem_checkpoint_manager(spark):
+    """Local sessions write streaming checkpoints through the
+    FileSystem-based manager (no forked readlink per rename)."""
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpointFileManagerClass").endswith(
+        ".FileSystemBasedCheckpointFileManager")
+
+
 def test_txn_append_sink_app_id_scopes_guard(spark, cdc_dir, tmp_path):
     """Two independent streams appending to ONE table: app_id scopes the
     replay guard, so stream B's batch 0 is not mistaken for a replay of
