@@ -722,3 +722,13 @@ class TxnLogDataSource(DataSource):
 
 def register_txn_source(spark) -> None:
     spark.dataSource.register(TxnLogDataSource)
+
+
+def change_feed(spark, path: str):
+    """The txn table at ``path`` as a streaming change feed
+    (``readChangeFeed``: row-level changes tagged ``_change_type`` and
+    ``_commit_version``, exactly-once via version offsets); registers
+    the ``txnlog`` source first."""
+    register_txn_source(spark)
+    return (spark.readStream.format("txnlog")
+            .option("readChangeFeed", "true").load(path))

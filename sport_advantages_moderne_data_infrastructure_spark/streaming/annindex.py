@@ -27,12 +27,15 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_expr
+from ..session import materialized
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnstream import change_feed
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 
 def write_stream_ivf_index(df: DataFrame, index_path: str,
@@ -48,11 +51,8 @@ def write_stream_ivf_index(df: DataFrame, index_path: str,
         ingest_batch(TxnTable(index_path), batch_df, centroids,
                      batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def _append_partitioned(idx: TxnTable, frame: DataFrame, batch_id: int,
@@ -118,11 +118,8 @@ def write_stream_ivfpq_index(df: DataFrame, index_path: str,
                         codebooks, batch_id, app_id,
                         meta_cols=meta_cols)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def ingest_batch_pq(idx: TxnTable, batch_df: DataFrame,
@@ -424,8 +421,7 @@ def apply_cdf_batch(idx: TxnTable, batch_df: DataFrame,
     from pyspark.sql import Window as W
 
     ct = F.col("_change_type")
-    batch_df.persist()
-    try:
+    with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
         pre = (batch_df.filter(ct.isin("delete", "update_preimage"))
                .select("vec_id", "embedding").distinct())
         is_post = ct.isin("insert", "update_postimage")
@@ -445,8 +441,6 @@ def apply_cdf_batch(idx: TxnTable, batch_df: DataFrame,
                 ingest_batch_pq(idx, post, centroids, codebooks,
                                 batch_id, app_id + "/ingest",
                                 meta_cols=meta_cols)
-    finally:
-        batch_df.unpersist()
 
 
 def write_stream_ivf_cdf(spark: SparkSession, embeddings_path: str,
@@ -464,12 +458,8 @@ def write_stream_ivf_cdf(spark: SparkSession, embeddings_path: str,
     (IVF-PQ) code table, ``meta_cols`` carrying filterable attributes
     as in the append-only sink. Returns the StreamingQuery; read the
     index back with :func:`read_index`."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
     idx = TxnTable(index_path)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(embeddings_path))
+    feed = change_feed(spark, embeddings_path)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -477,11 +467,8 @@ def write_stream_ivf_cdf(spark: SparkSession, embeddings_path: str,
         apply_cdf_batch(idx, batch_df, centroids, batch_id, app_id,
                         codebooks=codebooks, meta_cols=meta_cols)
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(feed.writeStream.foreachBatch(_apply), checkpoint,
+                  available_now)
 
 
 def check_and_rebuild(spark: SparkSession, index_path: str,

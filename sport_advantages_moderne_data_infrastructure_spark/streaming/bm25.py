@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..operators.mv import (AggMaterializedView, _last_meta_version_with,
                             _last_meta_with)
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 
 def make_df_view(index_root: str, n_buckets: int = 32,
@@ -112,11 +112,8 @@ def write_stream_bm25_index(df: DataFrame, index_root: str,
             return
         ingest_batch(postings, df_view, batch_df, batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def compact_if_needed(spark: SparkSession, index_root: str,

@@ -76,7 +76,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_two_phase
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 N_BUCKETS = 32
 
@@ -267,11 +267,8 @@ def write_stream_cc(df: DataFrame, root: str, checkpoint: str,
             return
         ingest_batch(assign, remap, batch_df, batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def current_labels(spark: SparkSession, root: str) -> DataFrame:

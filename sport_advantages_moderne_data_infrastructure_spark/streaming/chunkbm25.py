@@ -55,7 +55,8 @@ from ..operators.mv import (AggMaterializedView, MapMaterializedView,
                             _last_meta_version_with, _last_meta_with)
 from ..operators.retrieval import chunk_postings_frame
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnstream import change_feed
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 
 class ChunkPostingsView(MapMaterializedView):
@@ -206,12 +207,8 @@ def write_stream_chunk_bm25_index(spark: SparkSession, docs_path: str,
     each trigger is one :func:`refresh_chunk_index` guarded by the
     (app_id, batch_id) ledger. Returns the StreamingQuery; read the
     index back with :func:`read_chunk_bm25_index`."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
     docs = TxnTable(docs_path)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(docs_path))
+    feed = change_feed(spark, docs_path)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -223,11 +220,8 @@ def write_stream_chunk_bm25_index(spark: SparkSession, docs_path: str,
         refresh_chunk_index(spark, docs, index_root, batch_id, app_id,
                             n_buckets)
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(feed.writeStream.foreachBatch(_apply), checkpoint,
+                  available_now)
 
 
 def read_chunk_bm25_index(spark: SparkSession, index_root: str,

@@ -43,38 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_signatures, signature_bands
-from ..sources.txnlog import TxnConflictError, TxnTable
-from .scd2 import _ledger_seen
-
-
-def _guarded_append(table_path: str, df: DataFrame, batch_id: int,
-                    app_id: str | None, op: str) -> None:
-    """Append ``df`` unless this table already committed ``batch_id``
-    (the write_stream_txn_append contract, shared by both state
-    tables)."""
-    import os
-    import shutil
-
-    table = TxnTable(table_path)
-    seen = table.max_stream_batch_id(app_id)
-    if seen is not None and batch_id <= seen:
-        return
-    rel = table._write_data(df)  # noqa: SLF001 — package-internal
-    meta = {"stream_batch_id": batch_id, "operation": op}
-    if app_id is not None:
-        meta["stream_app_id"] = app_id
-    for _ in range(5):
-        try:
-            table.commit([rel], [], meta)
-            table.checkpoint_if_needed()
-            return
-        except TxnConflictError:
-            if _ledger_seen(table, app_id, batch_id):
-                shutil.rmtree(os.path.join(table_path, rel),
-                              ignore_errors=True)
-                return
-    raise TxnConflictError(
-        f"could not commit batch {batch_id} to {table_path}")
+from ..sources.txnlog import TxnTable
+from .pipeline import _guarded_append, _start
 
 
 def dedup_batch(batch_df: DataFrame, index_bands: DataFrame | None,
@@ -165,9 +135,10 @@ def write_stream_dedup(stream_docs: DataFrame, corpus_path: str,
             if uniques.isEmpty():
                 return
             # corpus FIRST (see module docstring for the crash argument)
-            _guarded_append(corpus_path, uniques.coalesce(spread),
+            _guarded_append(TxnTable(corpus_path), uniques.coalesce(spread),
                             batch_id, app_id, "stream_dedup_append")
-            _guarded_append(index_path, kept_bands.coalesce(spread),
+            _guarded_append(TxnTable(index_path),
+                            kept_bands.coalesce(spread),
                             batch_id, app_id, "stream_dedup_index")
         finally:
             uniques.unpersist()
@@ -175,10 +146,5 @@ def write_stream_dedup(stream_docs: DataFrame, corpus_path: str,
                 c.unpersist()  # processingTime stream leaked one cached
                 # plan/blocks per micro-batch otherwise)
 
-    writer = stream_docs.writeStream.foreachBatch(_process) \
-        .option("checkpointLocation", checkpoint)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_docs.writeStream.foreachBatch(_process),
+                  checkpoint, available_now, processing_time)

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..operators.mv import _last_meta_version_with, _last_meta_with
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 #: default DataSketches lgConfigK (2^12 registers, ~1.6% rse) —
 #: recorded per root in the sketch commit meta
@@ -123,11 +123,8 @@ def write_stream_approx_distinct(df: DataFrame, root: str,
         ingest_batch(events, sketch, batch_df, batch_id, col,
                      app_id, group_col=group_col, lg_k=lg_k)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,

@@ -42,12 +42,15 @@ of the layers drifting apart across restarts.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialized
 from ..sources.txnlog import TxnTable
+from ..sources.txnstream import change_feed
 from .joinmv import apply_join_mv_stream_batch
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 #: union tag column; change-feed frames never carry it
 _SIDE = "__side"
@@ -78,9 +81,6 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
     employee/validation and activity feeds; ``jmv2`` is the LEFT-join
     view (= ``final``); ``prime`` the MapMaterializedView serving the
     flagship projection. Read the output with ``prime.read``."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
     keys = list(jmv1.keys)
     ef = [f for f in TxnTable(emp_path).read(spark).schema.fields
           if f.name not in keys and f.name != "__kb"]
@@ -93,14 +93,12 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
         raise ValueError(
             "value columns must be distinct across the three sources")
 
-    def _feed(path):
-        return (spark.readStream.format("txnlog")
-                .option("readChangeFeed", "true").load(path))
+    def _feed(path, side, own, pads):
+        return _conform(change_feed(spark, path), side, keys, own, pads)
 
-    unioned = (
-        _conform(_feed(emp_path), "e", keys, ef, vf + af)
-        .unionByName(_conform(_feed(val_path), "v", keys, vf, ef + af))
-        .unionByName(_conform(_feed(act_path), "a", keys, af, ef + vf)))
+    unioned = (_feed(emp_path, "e", ef, vf + af)
+               .unionByName(_feed(val_path, "v", vf, ef + af))
+               .unionByName(_feed(act_path, "a", af, ef + vf)))
     ecols = [f.name for f in ef]
     vcols = [f.name for f in vf]
     acols = [f.name for f in af]
@@ -108,8 +106,7 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df.persist()
-        try:
+        with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
             # layer 1: emp ⋈ val join view (three guarded legs inside)
             apply_join_mv_stream_batch(
                 spark, jmv1,
@@ -144,11 +141,6 @@ def write_stream_final_pipeline(spark: SparkSession, emp_path: str,
                                          "final_pipe_agg_init")))
                 jmv2.refresh(spark, jmv1.view, aggv.view)
                 prime.refresh(spark, jmv2.view)
-        finally:
-            batch_df.unpersist()
 
-    w = (unioned.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(unioned.writeStream.foreachBatch(_apply), checkpoint,
+                  available_now)

@@ -26,12 +26,15 @@ the non-row-wise history and rebuilds), then resume streaming.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mv import JoinMaterializedView
+from ..session import materialized
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnstream import change_feed
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 #: the union tag column; change-feed frames never carry it
 _SIDE = "__side"
@@ -79,9 +82,6 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
     StreamingQuery. Read the view with ``jmv.read``. Do not mix with
     batch ``jmv.refresh`` on the same view: the stream's bookkeeping
     is the (app_id, batch_id) ledger, not ``mv_left_version``."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
     keys = jmv.keys
     # "__kb" excluded: a source that is itself a maintained bucketed
     # view carries its bucket column — physical layout, not data
@@ -93,27 +93,17 @@ def write_stream_join_mv(spark: SparkSession, left_path: str,
     if clash:
         raise ValueError(f"value columns must be distinct: {clash}")
 
-    def _feed(path):
-        return (spark.readStream.format("txnlog")
-                .option("readChangeFeed", "true").load(path))
-
-    unioned = (_conform(_feed(left_path), "l", keys, lf, rf)
-               .unionByName(_conform(_feed(right_path), "r", keys,
-                                     rf, lf)))
+    unioned = (_conform(change_feed(spark, left_path), "l", keys, lf, rf)
+               .unionByName(_conform(change_feed(spark, right_path), "r",
+                                     keys, rf, lf)))
     lcols, rcols = [f.name for f in lf], [f.name for f in rf]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df.persist()
-        try:
+        with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
             apply_join_mv_stream_batch(spark, jmv, batch_df, batch_id,
                                        app_id, lcols, rcols)
-        finally:
-            batch_df.unpersist()
 
-    w = (unioned.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(unioned.writeStream.foreachBatch(_apply), checkpoint,
+                  available_now)

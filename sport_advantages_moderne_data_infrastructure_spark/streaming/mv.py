@@ -20,11 +20,14 @@ streaming.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.mv import apply_delta
+from ..session import materialized
 from ..sources.txnlog import TxnTable, agg_delta_from_changes
-from .scd2 import _guarded_commit, _stream_meta
+from ..sources.txnstream import change_feed
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 
 def write_stream_agg_view(spark: SparkSession, source_path: str,
@@ -40,17 +43,13 @@ def write_stream_agg_view(spark: SparkSession, source_path: str,
     downstream view — e.g. the composed pipeline's LEFT-join MV — can
     follow the streamed aggregate incrementally."""
     from ..operators.mv import agg_view_changes
-    from ..sources.txnstream import TxnLogDataSource
 
-    spark.dataSource.register(TxnLogDataSource)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(source_path))
+    feed = change_feed(spark, source_path)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df.persist()
-        try:
+        with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
             view = TxnTable(view_path)
             delta = agg_delta_from_changes(batch_df, group_cols, value_col)
 
@@ -65,14 +64,9 @@ def write_stream_agg_view(spark: SparkSession, source_path: str,
                     changes=ch)
 
             _guarded_commit(view, batch_id, app_id, _leg)
-        finally:
-            batch_df.unpersist()
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(feed.writeStream.foreachBatch(_apply), checkpoint,
+                  available_now)
 
 
 def write_stream_map_view(spark: SparkSession, source_path: str,
@@ -92,30 +86,20 @@ def write_stream_map_view(spark: SparkSession, source_path: str,
     with batch ``mmv.refresh`` on the same view: the stream's
     bookkeeping is the (app_id, batch_id) ledger, not
     ``mv_source_version``."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(source_path))
+    feed = change_feed(spark, source_path)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df.persist()
-        try:
+        with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
             mmv.apply_change_batch(
                 spark, batch_df,
                 _stream_meta(batch_id, app_id, "map_mv_stream_refresh"),
                 guard=lambda table, fn: _guarded_commit(
                     table, batch_id, app_id, fn))
-        finally:
-            batch_df.unpersist()
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(feed.writeStream.foreachBatch(_apply), checkpoint,
+                  available_now)
 
 
 def write_stream_bucketed_agg_view(spark: SparkSession,
@@ -130,27 +114,17 @@ def write_stream_bucketed_agg_view(spark: SparkSession,
     ``__kb`` buckets, one replay-guarded commit per batch. Read with
     ``aggmv.read``. Do not mix with batch ``aggmv.refresh`` on the
     same view (ledger vs ``mv_source_version`` bookkeeping)."""
-    from ..sources.txnstream import TxnLogDataSource
-
-    spark.dataSource.register(TxnLogDataSource)
-    feed = (spark.readStream.format("txnlog")
-            .option("readChangeFeed", "true").load(source_path))
+    feed = change_feed(spark, source_path)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df.persist()
-        try:
+        with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
             aggmv.apply_change_batch(
                 spark, batch_df,
                 _stream_meta(batch_id, app_id, "agg_mv_stream_refresh"),
                 guard=lambda table, fn: _guarded_commit(
                     table, batch_id, app_id, fn))
-        finally:
-            batch_df.unpersist()
 
-    w = (feed.writeStream.foreachBatch(_apply)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(feed.writeStream.foreachBatch(_apply), checkpoint,
+                  available_now)

@@ -15,12 +15,16 @@ file/Delta sinks (T3, SaveDelta.scala:161).
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.cdc import parse_cdc
+from ..sources.txnlog import TxnConflictError, TxnTable
 
 # Schema of the raw CDC record frame (FIXTURES.md §4 / Kafka wire format).
 CDC_RAW_SCHEMA = T.StructType([
@@ -79,30 +83,140 @@ def stream_rate_fallback(spark: SparkSession, rows_per_second: int = 1) -> DataF
     )
 
 
+# --- sink plumbing shared by every streaming sink in this package ---------
+
+
+def _start(writer, checkpoint: str | None, available_now: bool,
+           processing_time: str | None = None):
+    """Set the checkpoint and the trigger on ``writer`` (a
+    DataStreamWriter) and start the query. An explicit
+    ``processing_time`` wins over ``available_now``, which otherwise
+    picks availableNow (drain what is there, then stop) over Spark's
+    default continuous micro-batching."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    elif available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _stream_meta(batch_id: int, app_id: str | None, operation: str) -> dict:
+    meta = {"stream_batch_id": batch_id, "operation": operation}
+    if app_id is not None:
+        meta["stream_app_id"] = app_id
+    return meta
+
+
+def _ledger_seen(table: TxnTable, app_id: str | None,
+                 batch_id: int) -> bool:
+    """True when the (app_id, batch_id) ledger already covers this
+    batch — the Delta SetTransaction lookup every exactly-once sink
+    runs. None-SAFE: batch 0's high water is 0, which the
+    ``(x or -1) >= batch_id`` idiom mis-read as absent — with the r12
+    in-commit ledger raise, that false negative turned a batch-0
+    replay race into 10+ doomed retries and a dead stream instead of
+    an absorbed replay."""
+    seen = table.max_stream_batch_id(app_id)
+    return seen is not None and seen >= batch_id
+
+
+def _routed_append(table: TxnTable, batch_df, batch_id: int,
+                   app_id: str | None, meta: dict) -> None:
+    """Replay-guarded append THROUGH the table's declared write path —
+    the leg for targets that declare generated/identity/partition_by
+    config (a raw ``_write_data`` would bypass generation and strand
+    rows outside a declared partition layout). ``append()`` handles
+    ordinary version races internally (data written once, only the
+    metadata publish retries — except identity re-assignment, which
+    must rewrite); a conflict that ESCAPES it is re-checked against
+    the ledger (the in-commit ledger raise surfaces same-batch replica
+    races this way) and absorbed when it was our own replay."""
+    try:
+        table.append(batch_df, meta)
+    except TxnConflictError:
+        if not _ledger_seen(table, app_id, batch_id):
+            raise
+        return  # racer was our own replay: batch already committed
+    table.checkpoint_if_needed()
+
+
+def _retry_commit(table: TxnTable, batch_id: int, app_id: str | None,
+                  attempt) -> bool:
+    """Run ``attempt()`` (which must raise TxnConflictError on a lost
+    commit race), re-checking the ledger after every lost race. True
+    when ``attempt()`` committed, False when the ledger shows the
+    batch was committed by someone else — our own replay."""
+    for _ in range(5):
+        try:
+            attempt()
+            table.checkpoint_if_needed()
+            return True
+        except TxnConflictError:
+            if _ledger_seen(table, app_id, batch_id):
+                return False
+    attempt()
+    table.checkpoint_if_needed()
+    return True
+
+
+def _guarded_commit(table: TxnTable, batch_id: int, app_id: str | None,
+                    attempt) -> None:
+    """Run ``attempt()`` unless the (app_id, batch_id) ledger says
+    this leg already committed; see :func:`_retry_commit`."""
+    if not _ledger_seen(table, app_id, batch_id):
+        _retry_commit(table, batch_id, app_id, attempt)
+
+
+def _guarded_append(table: TxnTable, frame: DataFrame, batch_id: int,
+                    app_id: str | None, op: str) -> bool:
+    """The exactly-once append leg every txn append sink shares: one
+    ledger lookup, one write, one commit. True when the table holds
+    this batch afterwards (committed now or by an earlier run), False
+    when the frame was empty and nothing was committed.
+
+    A plain target runs ONE Spark job, the parquet write: the written
+    dir's row count comes from its footers, and an empty frame removes
+    its dir and commits nothing (a crash before that removal leaves an
+    unreferenced dir for ``vacuum()``). A target with generated/
+    identity/partition config goes through :func:`_routed_append`
+    after an ``isEmpty()`` job, since ``append()`` would commit an
+    empty version. A lost commit race that turns out to be our own
+    replay drops the now-orphaned dir."""
+    if _ledger_seen(table, app_id, batch_id):
+        return True
+    meta = _stream_meta(batch_id, app_id, op)
+    if table.generation_config():
+        if frame.isEmpty():
+            return False
+        _routed_append(table, frame, batch_id, app_id, meta)
+        return True
+    rel = table._write_data(frame)  # noqa: SLF001 — package-internal
+    written = os.path.join(table.path, rel)
+    if table._dir_rows(rel) == 0:  # noqa: SLF001 — footers only
+        shutil.rmtree(written, ignore_errors=True)
+        return False
+    if not _retry_commit(table, batch_id, app_id,
+                         lambda: table.commit([rel], [], meta)):
+        shutil.rmtree(written, ignore_errors=True)
+    return True
+
+
 def write_stream_parquet(df: DataFrame, path: str, checkpoint: str,
                          available_now: bool = True, processing_time: str | None = None):
     """K1 (SaveDelta.scala:156-163): checkpointed append sink. Parquet here;
     on a lakehouse deployment swap format for "delta" — the call shape is
     identical."""
-    w = (
-        df.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif processing_time:
-        w = w.trigger(processingTime=processing_time)  # T1: "30 seconds"
-    return w.start()
+    w = (df.writeStream.format("parquet").outputMode("append")
+         .option("path", path))
+    return _start(w, checkpoint, available_now, processing_time)
 
 
 def write_stream_memory(df: DataFrame, name: str, available_now: bool = True):
     """Test sink: in-memory table queryable as ``SELECT * FROM {name}``."""
     w = df.writeStream.format("memory").queryName(name).outputMode("append")
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(w, None, available_now)
 
 
 def write_stream_merge(df: DataFrame, target: str, checkpoint: str,
@@ -149,11 +263,8 @@ def write_stream_merge(df: DataFrame, target: str, checkpoint: str,
             merged = latest
         merged.write.mode("overwrite").parquet(target)
 
-    w = (df.writeStream.foreachBatch(_merge)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_merge), checkpoint,
+                  available_now)
 
 
 def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
@@ -180,19 +291,13 @@ def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
     atomic commit as the batch's upserts. Last-event-per-key dedup runs
     first, so a key that is updated then tombstoned within one batch
     deletes."""
-    from ..sources.txnlog import TxnTable
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         table = TxnTable(target)
-        # Delta SetTransaction rule (ADVICE r3): scan the WHOLE log for
-        # this sink's highest batch id — a compact() or second writer
-        # interleaving between commit and crash-replay hides it from the
-        # head commit. Batch ids are monotonic per checkpoint.
-        seen = table.max_stream_batch_id()
-        if seen is not None and batch_id <= seen:
+        if _ledger_seen(table, None, batch_id):
             return  # replay of an already-committed batch
         latest = (batch_df.withColumn(
             "__rn", F.row_number().over(
@@ -202,11 +307,8 @@ def write_stream_merge_txn(df: DataFrame, target: str, checkpoint: str,
                     meta={"stream_batch_id": batch_id},
                     matched_delete=matched_delete, insert=insert)
 
-    w = (df.writeStream.foreachBatch(_merge)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_merge), checkpoint,
+                  available_now)
 
 
 def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
@@ -231,80 +333,24 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
     Reference anchor: SaveDelta.scala:157-163 (checkpointed Delta append
     sink).
 
-    A plain micro-batch runs ONE Spark job, the parquet write; there is
-    no separate emptiness job. The written dir's row count comes from
-    its parquet footers, and an empty batch (e.g. only malformed or
-    tombstone frames) removes its dir and commits nothing. Targets with
-    generated/identity/partition config route through ``append()`` and
-    keep an ``isEmpty()`` job, since ``append()`` would commit an empty
-    version.
+    Each micro-batch is one :func:`_guarded_append` leg: ONE Spark job
+    on a plain target, and an empty batch (e.g. only malformed or
+    tombstone frames) commits nothing.
 
     ``export_delta=True`` (r14) re-exports the table's Delta-protocol
     ``_delta_log`` after every committed micro-batch — the INCREMENTAL
     export writes only the new commit's JSON (O(batch), the
     export-per-commit shape the interop module documents), so a real
     Delta reader can tail the streamed table continuously."""
-    import os
-    import shutil as _shutil
-
-    from ..sources.txnlog import TxnConflictError, TxnTable
-
     def _append(batch_df: DataFrame, batch_id: int) -> None:
         table = TxnTable(target)
-        seen = table.max_stream_batch_id(app_id)
-        if seen is not None and batch_id <= seen:
-            # replay of an already-committed batch: still catch up the
-            # export — a crash BETWEEN commit and export would
-            # otherwise leave the exported log one commit behind
-            # indefinitely on a quiet stream (incremental export is a
-            # no-op when already current)
+        # a replayed batch also re-runs the export: a crash BETWEEN
+        # commit and export would otherwise leave the exported log one
+        # commit behind indefinitely on a quiet stream (incremental
+        # export is a no-op when already current)
+        if _guarded_append(table, batch_df, batch_id, app_id,
+                           "stream_append"):
             _maybe_export(table)
-            return
-        meta = {"stream_batch_id": batch_id, "operation": "stream_append"}
-        if app_id is not None:
-            meta["stream_app_id"] = app_id
-        if table.generation_config():
-            # generated/identity/partition-declared tables: route
-            # through append(), which computes/allocates/lays out
-            # INSIDE the same commit (the identity conflict loop
-            # re-reads the high water and re-assigns on a lost race;
-            # a partition-declared target gets col=value subdir adds —
-            # streaming ingest into a date-partitioned table). The
-            # shared helper absorbs same-batch replica races via the
-            # in-commit ledger raise + a None-safe ledger re-check.
-            # append() would commit an empty version, so this path
-            # keeps its own emptiness job.
-            if batch_df.isEmpty():
-                return
-            from .scd2 import _routed_append
-
-            _routed_append(table, batch_df, batch_id, app_id, meta)
-            _maybe_export(table)
-            return
-        rel = table._write_data(batch_df)  # noqa: SLF001 — package-internal
-        if table._dir_rows(rel) == 0:  # noqa: SLF001 — footers only
-            # empty batch: nothing to commit; a crash before this
-            # removal leaves an unreferenced dir for vacuum()
-            _shutil.rmtree(os.path.join(target, rel), ignore_errors=True)
-            return
-        for _ in range(5):  # blind append: commit races are retryable
-            try:
-                table.commit([rel], [], meta)
-                table.checkpoint_if_needed()
-                _maybe_export(table)
-                return
-            except TxnConflictError:
-                from .scd2 import _ledger_seen
-                if _ledger_seen(table, app_id, batch_id):
-                    # racer was our own replay: drop the duplicate dir
-                    _shutil.rmtree(os.path.join(target, rel),
-                                   ignore_errors=True)
-                    _maybe_export(table)  # crash-between-commit-and-
-                    # export catch-up, same as the seen path above
-                    return
-        table.commit([rel], [], meta)
-        table.checkpoint_if_needed()
-        _maybe_export(table)
 
     def _maybe_export(table) -> None:
         if export_delta:
@@ -324,13 +370,8 @@ def write_stream_txn_append(df: DataFrame, target: str, checkpoint: str,
                 df.sparkSession, table.path)
             compact_delta_log_if_needed(table.path, span=5)
 
-    w = (df.writeStream.foreachBatch(_append)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif processing_time:
-        w = w.trigger(processingTime=processing_time)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_append), checkpoint,
+                  available_now, processing_time)
 
 
 def notify_foreach_batch(df: DataFrame, send, checkpoint: str,
@@ -347,10 +388,5 @@ def notify_foreach_batch(df: DataFrame, send, checkpoint: str,
         for row in batch_df.toLocalIterator():
             send(row.asDict())
 
-    w = (
-        msgs.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(msgs.writeStream.foreachBatch(_emit), checkpoint,
+                  available_now)

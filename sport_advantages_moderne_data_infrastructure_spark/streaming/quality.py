@@ -21,8 +21,13 @@ split is exactly-once end-to-end:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialized
+from ..sources.txnlog import TxnTable
+from .pipeline import _guarded_append, _start
 
 
 def violations_col(rules: list[tuple[str, str]]):
@@ -50,52 +55,6 @@ def split_quarantine(df: DataFrame, rules: list[tuple[str, str]]
     return clean, bad
 
 
-def _txn_append_leg(path: str, batch_df: DataFrame, batch_id: int,
-                    app_id: str | None,
-                    op: str = "stream_quarantine_append") -> None:
-    """One replay-guarded txn append — the per-table leg both routing
-    sinks share (quality quarantine and the decontamination gate): a
-    crash between a batch's two legs replays the batch and re-commits
-    only the missing one."""
-    import os
-    import shutil as _shutil
-
-    from ..sources.txnlog import TxnConflictError, TxnTable
-
-    table = TxnTable(path)
-    seen = table.max_stream_batch_id(app_id)
-    if seen is not None and batch_id <= seen:
-        return  # this leg already committed this batch
-    meta = {"stream_batch_id": batch_id, "operation": op}
-    if app_id is not None:
-        meta["stream_app_id"] = app_id
-    if table.generation_config():
-        # generated/identity/partition-declared target: route through
-        # append() so the writer computes/allocates/lays out inside
-        # the same commit (a raw _write_data here would bypass
-        # generation and strand rows outside a declared partition
-        # layout); same-batch replica races are absorbed via the
-        # in-commit ledger raise + the shared None-safe re-check
-        from .scd2 import _routed_append
-
-        _routed_append(table, batch_df, batch_id, app_id, meta)
-        return
-    rel = table._write_data(batch_df)  # noqa: SLF001
-    for _ in range(5):
-        try:
-            table.commit([rel], [], meta)
-            table.checkpoint_if_needed()
-            return
-        except TxnConflictError:
-            from .scd2 import _ledger_seen
-            if _ledger_seen(table, app_id, batch_id):
-                _shutil.rmtree(os.path.join(path, rel),
-                               ignore_errors=True)
-                return
-    table.commit([rel], [], meta)
-    table.checkpoint_if_needed()
-
-
 def write_stream_quarantine(df: DataFrame, rules: list[tuple[str, str]],
                             target: str, quarantine: str, checkpoint: str,
                             app_id: str | None = None,
@@ -105,31 +64,24 @@ def write_stream_quarantine(df: DataFrame, rules: list[tuple[str, str]],
     failed expectations, serialized to a CSV string for a stable
     parquet schema) append to ``quarantine``. Each leg is one atomic
     txn commit guarded by (app_id, batch_id) — replay after any crash
-    re-commits only the leg that is missing."""
-
-    def _append_leg(path: str, batch_df: DataFrame, batch_id: int) -> None:
-        _txn_append_leg(path, batch_df, batch_id, app_id)
+    re-commits only the leg that is missing. A leg whose frame is
+    empty commits nothing: a batch with no violations adds no
+    quarantine version (and no data dir), and a batch with no clean
+    rows adds no target version."""
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df.persist()
-        try:
+        with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
             clean, bad = split_quarantine(batch_df, rules)
-            _append_leg(target, clean, batch_id)
-            _append_leg(
-                quarantine,
-                bad.withColumn("violations",
-                               F.array_join("violations", ",")),
-                batch_id)
-        finally:
-            batch_df.unpersist()
+            bad = bad.withColumn("violations",
+                                 F.array_join("violations", ","))
+            for path, frame in ((target, clean), (quarantine, bad)):
+                _guarded_append(TxnTable(path), frame, batch_id, app_id,
+                                "stream_quarantine_append")
 
-    w = (df.writeStream.foreachBatch(_route)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_route), checkpoint,
+                  available_now)
 
 
 # --- decontamination at ingest (r11): the eval-overlap gate ---------------
@@ -170,13 +122,14 @@ def write_stream_decontaminate(df: DataFrame, eval_hashes: DataFrame,
     quarantine sink, so routing is exactly-once across restarts; the
     admitted corpus is contamination-free BY CONSTRUCTION at every
     point in time, which is the production property (a post-hoc sweep
-    leaves a window where training reads tainted docs)."""
+    leaves a window where training reads tainted docs). As in the
+    quality sink, a leg whose frame is empty commits nothing: a batch
+    with no contaminated documents adds no quarantine version."""
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df.persist()
-        try:
+        with materialized(batch_df, StorageLevel.MEMORY_AND_DISK_DESER):
             hits = contamination_hits(batch_df, eval_hashes,
                                       min_shared)
             worst = (hits.groupBy("doc_id")
@@ -190,15 +143,9 @@ def write_stream_decontaminate(df: DataFrame, eval_hashes: DataFrame,
             clean = (tagged.filter(F.col("n_shared").isNull())
                      .drop("eval_id", "n_shared"))
             bad = tagged.filter(F.col("n_shared").isNotNull())
-            _txn_append_leg(target, clean, batch_id, app_id,
-                            op="stream_decontaminate_append")
-            _txn_append_leg(quarantine, bad, batch_id, app_id,
-                            op="stream_decontaminate_append")
-        finally:
-            batch_df.unpersist()
+            for path, frame in ((target, clean), (quarantine, bad)):
+                _guarded_append(TxnTable(path), frame, batch_id, app_id,
+                                "stream_decontaminate_append")
 
-    w = (df.writeStream.foreachBatch(_route)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_route), checkpoint,
+                  available_now)

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..operators.mv import _last_meta_version_with, _last_meta_with
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 #: default frozen grid (documented per root in the vals commit meta)
 N_VB = 64
@@ -147,11 +147,8 @@ def write_stream_quantiles(df: DataFrame, root: str, checkpoint: str,
         ingest_batch(vals, hist, batch_df, batch_id, col, lo, hi,
                      n_vb, app_id, group_col=group_col)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,

@@ -46,7 +46,7 @@ from ..functions.vectors import dot_expr
 from ..operators.ivf import assign_centroids
 from ..sources.txnlog import TxnTable
 from .annindex import _append_partitioned
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 COS_THRESHOLD = 0.99
 
@@ -133,11 +133,8 @@ def write_stream_semdedup(df: DataFrame, root: str,
             return
         ingest_batch(root, batch_df, centroids, batch_id, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def pruned_ids(spark: SparkSession, root: str) -> DataFrame:

@@ -49,7 +49,7 @@ from ..operators.sketches import (exact_pass, grouped_exact_pass,
                                   grouped_mg_merge, grouped_mg_partial,
                                   mg_merge, mg_partial)
 from ..sources.txnlog import TxnTable
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 
 def _tables(root: str) -> tuple[TxnTable, TxnTable]:
@@ -160,11 +160,8 @@ def write_stream_grouped_mg_sketch(df: DataFrame, root: str,
         ingest_batch_grouped(events, sketch, batch_df, batch_id,
                              group_col, col, k, app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,
@@ -239,11 +236,8 @@ def write_stream_mg_sketch(df: DataFrame, root: str, checkpoint: str,
         ingest_batch(events, sketch, batch_df, batch_id, col, k,
                      app_id)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def heavy_hitters_served(spark: SparkSession, root: str, col: str,

@@ -50,7 +50,7 @@ from ..operators.dedup import (
 )
 from ..sources.txnlog import TxnTable
 from . import cc as CC
-from .scd2 import _guarded_commit, _stream_meta
+from .pipeline import _guarded_commit, _start, _stream_meta
 
 N_SB = 32  # band-key hash buckets for the persisted band index
 
@@ -194,11 +194,8 @@ def write_stream_splits(df: DataFrame, root: str, checkpoint: str,
             return
         ingest_batch(root, batch_df, batch_id, app_id, threshold)
 
-    w = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(_ingest), checkpoint,
+                  available_now)
 
 
 def compact_if_needed(spark: SparkSession, root: str,

@@ -661,7 +661,7 @@ def test_batch_zero_replay_race_absorbed(spark, tmp_path):
     absorbed — the ledger high water of 0 is falsy and the old
     `(x or -1) >= batch_id` re-check mis-read it as absent, turning the
     in-commit ledger conflict into a dead stream."""
-    from sport_advantages_moderne_data_infrastructure_spark.streaming.scd2 import (
+    from sport_advantages_moderne_data_infrastructure_spark.streaming.pipeline import (
         _ledger_seen,
         _routed_append,
     )

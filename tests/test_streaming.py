@@ -405,6 +405,30 @@ def test_txn_append_sink_app_id_scopes_guard(spark, cdc_dir, tmp_path):
     assert t.read(spark).count() == 2 * n1
 
 
+def test_txn_append_sink_processing_time_keeps_running(spark, cdc_dir,
+                                                       tmp_path):
+    """An explicit processing_time wins over the available_now default:
+    the query drains what is there and keeps running instead of
+    stopping after one availableNow pass."""
+    from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+        TxnTable,
+    )
+
+    table = str(tmp_path / "t")
+    q = P.write_stream_txn_append(
+        P.stream_cdc_from_files(spark, cdc_dir), table,
+        str(tmp_path / "ckpt"), processing_time="1 second")
+    try:
+        q.processAllAvailable()
+        # an availableNow run would terminate right after the drain
+        assert not q.awaitTermination(3)
+        assert q.isActive
+        assert (TxnTable(table).read(spark).count()
+                == parse_cdc(spark.read.parquet(cdc_dir)).count())
+    finally:
+        q.stop()
+
+
 # -- streaming incremental dedup -------------------------------------------
 
 
@@ -553,6 +577,7 @@ def test_stream_quarantine_routes_and_is_exactly_once(spark, sf_dir,
     events.repartition(4).write.parquet(src)
     target, quar = str(tmp_path / "clean"), str(tmp_path / "quar")
     ckpt = str(tmp_path / "ck")
+    n_cached0 = spark.sparkContext._jsc.getPersistentRDDs().size()
 
     def run():
         stream = (spark.readStream.schema(events.schema)
@@ -582,6 +607,63 @@ def test_stream_quarantine_routes_and_is_exactly_once(spark, sf_dir,
     run()
     assert TxnTable(target).read(spark).count() == n_clean
     assert TxnTable(quar).read(spark).count() == n_bad
+    # the per-batch cache is released after every micro-batch
+    assert (spark.sparkContext._jsc.getPersistentRDDs().size()
+            == n_cached0)
+
+
+def test_stream_quarantine_empty_leg_commits_nothing(spark, sf_dir,
+                                                      tmp_path):
+    """A batch whose rows all pass the rules adds no quarantine
+    version and no data dir; the next batch with violations commits
+    to the quarantine table under its own stream_batch_id."""
+    import glob
+    import os
+    import shutil
+
+    from sport_advantages_moderne_data_infrastructure_spark.plans.streamops import (  # noqa: E501
+        QUARANTINE_RULES,
+    )
+    from sport_advantages_moderne_data_infrastructure_spark.sources.txnlog import (
+        TxnTable,
+    )
+    from sport_advantages_moderne_data_infrastructure_spark.streaming.quality import (  # noqa: E501
+        split_quarantine,
+        write_stream_quarantine,
+    )
+
+    events = load_table(spark, sf_dir, "events")
+    clean, bad = split_quarantine(events, QUARANTINE_RULES)
+    src, target, quar, ckpt = (str(tmp_path / d)
+                               for d in ("src", "clean", "quar", "ck"))
+    os.makedirs(src)
+
+    def add_file(df, name):
+        stage = str(tmp_path / ("stage_" + name))
+        df.coalesce(1).write.parquet(stage)
+        part, = glob.glob(os.path.join(stage, "part-*.parquet"))
+        shutil.move(part, os.path.join(src, name + ".parquet"))
+
+    def run():
+        stream = (spark.readStream.schema(events.schema)
+                  .option("maxFilesPerTrigger", "1").parquet(src))
+        write_stream_quarantine(stream, QUARANTINE_RULES, target, quar,
+                                ckpt, app_id="qempty").awaitTermination(180)
+
+    add_file(clean.limit(20), "a")
+    run()
+    q = TxnTable(quar)
+    assert q.latest_version() is None
+    data = os.path.join(quar, "data")
+    assert not os.path.isdir(data) or os.listdir(data) == []
+    assert TxnTable(target).read(spark).count() == 20
+
+    add_file(bad.drop("violations").limit(5), "b")
+    run()
+    assert [d["meta"]["stream_batch_id"] for d in q.history()] == [1]
+    assert q.read(spark).count() == 5
+    assert len(os.listdir(data)) == 1
+    assert TxnTable(target).read(spark).count() == 20
 
 
 def test_stream_decontaminate_gate(spark, sf_dir, tmp_path):
